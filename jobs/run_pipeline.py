@@ -17,24 +17,13 @@ import json
 import time
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True, help="sf_dir with documents.parquet")
-    ap.add_argument("--checkpoint", default=None, help="snapshot-store dir (resume)")
-    ap.add_argument("--output", default=None, help="triples sink dir")
-    ap.add_argument("--replicate", type=int, default=1)
-    args = ap.parse_args()
-
-    from pyspark.sql import SparkSession
-
+def run_job(spark, args: argparse.Namespace) -> dict:
+    """Run (or resume) the pipeline and, with ``--output``, write the
+    triples; returns the summary ``main`` prints."""
     from kbgen_spark import fixtures as FX
     from kbgen_spark.operators.materialize import write_triples
     from kbgen_spark.pipeline import run_pipeline
     from kbgen_spark.plans.lineage import ParquetSnapshotStore
-
-    # under spark-submit a session already exists with the cluster master
-    spark = SparkSession.builder.appName("kbgen_run_pipeline").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     store = ParquetSnapshotStore(args.checkpoint) if args.checkpoint else None
     docs = None
@@ -44,19 +33,38 @@ def main() -> None:
 
     t0 = time.time()
     run = run_pipeline(spark, args.input, store=store, docs=docs)
-    n = run.triples.count()
-    elapsed = time.time() - t0
     if args.output:
+        # One materialize pass: the write fires the run's observe() counters,
+        # which carry the triple count.
         write_triples(run.triples, args.output)
-    print(
-        json.dumps(
-            {
-                "triples": n,
-                "elapsed_sec": round(elapsed, 2),
-                "skipped_stages": run.skipped,
-            }
-        )
-    )
+        n = run.metrics()["n_triples"]
+    else:
+        n = run.triples.count()
+    return {
+        "triples": n,
+        "elapsed_sec": round(time.time() - t0, 2),
+        "skipped_stages": run.skipped,
+    }
+
+
+def parse_args(argv=None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--input", required=True, help="sf_dir with documents.parquet")
+    ap.add_argument("--checkpoint", default=None, help="snapshot-store dir (resume)")
+    ap.add_argument("--output", default=None, help="triples sink dir")
+    ap.add_argument("--replicate", type=int, default=1)
+    return ap.parse_args(argv)
+
+
+def main() -> None:
+    args = parse_args()
+
+    from pyspark.sql import SparkSession
+
+    # under spark-submit a session already exists with the cluster master
+    spark = SparkSession.builder.appName("kbgen_run_pipeline").getOrCreate()
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    print(json.dumps(run_job(spark, args)))
     spark.stop()
 
 

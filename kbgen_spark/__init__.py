@@ -15,9 +15,14 @@ Layout
 - ``streaming/``   Structured Streaming surface (windows, incremental ingest).
 - ``pipeline``     end-to-end extract→link→canonicalize→materialize flow.
 
-Everything is DataFrame-first: no RDD API, no per-row Python UDFs — Python
-crosses the JVM boundary only through Arrow-batched pandas UDFs
-(`BASELINE.json:15`).
+Everything is DataFrame-first: no RDD API, no per-row Python UDFs
+(`BASELINE.json:15`). Data crosses the JVM boundary through Arrow: rows go
+to Python workers only in pandas UDFs and ``mapInPandas``, and the
+pipeline's driver-built tables (relation patterns, canon's driver-local
+surfaces and map, local connected components) travel once as Arrow streams
+into JVM local relations (``io.local_frame``), so a pipeline run starts no
+Python worker for them. ``createDataFrame(<python list>)``, which scans a
+``PythonRDD``, remains only off the pipeline path.
 """
 
 __version__ = "0.1.0"

@@ -7,12 +7,14 @@
 - S5: N-Triples sink — reference serializes an rdflib Graph
   [R generate_model.py]; here ``concat_ws`` + ``write.text``.
   (The partitioned parquet triple sink lives in operators/materialize.py.)
+- ``local_frame``: driver-built rows as a JVM-side local relation.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # <subject> <predicate> <object-uri> .   |   <s> <p> "literal" .
 _NT_RE = r"^\s*<([^>]*)>\s+<([^>]*)>\s+(?:<([^>]*)>|\"((?:[^\"\\]|\\.)*)\")\s*\.\s*$"
@@ -43,3 +45,22 @@ def write_ntriples(triples: DataFrame, path: str, base_uri: str = "http://kb/") 
     from kbgen_spark.operators.materialize import triples_to_ntriples
 
     triples_to_ntriples(triples, base_uri).write.mode("overwrite").text(path)
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str | StructType) -> DataFrame:
+    """Driver-built rows (tuples in ``schema`` column order) as a JVM-side
+    local relation: the rows cross to the JVM once as an Arrow stream and
+    scan as ``LocalTableScan``. ``spark.createDataFrame(<python list>)``
+    instead scans a ``PythonRDD``, so every action over it starts a Python
+    worker; a pandas frame takes the Arrow path only when it is non-empty.
+    An Arrow table takes it at any size, empty included."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow_schema = to_arrow_schema(st)
+    cols = list(zip(*rows)) if rows else [() for _ in st.fields]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, st)

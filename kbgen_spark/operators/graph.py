@@ -18,6 +18,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from kbgen_spark.io import local_frame
 
 MAX_ITERS = 50
 
@@ -163,8 +166,12 @@ def _local_union_find(sym: DataFrame, vertices: DataFrame | None) -> DataFrame:
     if vertices is not None:
         nodes |= {r[0] for r in vertices.distinct().collect()}
     comp_rows = [(n, find(n) if n in parent else n) for n in sorted(nodes)]
-    spark = sym.sparkSession
-    return spark.createDataFrame(comp_rows, ["id", "component"])
+    id_type = sym.schema["u"].dataType
+    return local_frame(
+        sym.sparkSession,
+        comp_rows,
+        StructType([StructField("id", id_type), StructField("component", id_type)]),
+    )
 
 
 def canonical_representatives(components: DataFrame) -> DataFrame:

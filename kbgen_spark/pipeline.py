@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kbgen_spark import fixtures as FX
+from kbgen_spark.io import local_frame
 from kbgen_spark.operators.canonicalize import similar_surface_edges
 from kbgen_spark.operators.extract import extract_mentions
 from kbgen_spark.operators.graph import connected_components
@@ -139,8 +140,8 @@ def _build_canon_map_local(
         if e not in m or ck < m[e]:
             m[e] = ck
     rows = [(e, cid, ct) for e, (cid, ct) in sorted(m.items())]
-    return spark.createDataFrame(
-        rows, "entity_id string, canon_id string, canon_type string"
+    return local_frame(
+        spark, rows, "entity_id string, canon_id string, canon_type string"
     )
 
 
@@ -157,7 +158,11 @@ def build_canon_map(
     Size-adaptive: a gazetteer under ``local_threshold`` rows resolves
     driver-side (2 dictionary-sized jobs — a truncating collect and the
     MinHash signature aggregate — instead of ~10 shuffle stages); pass 0 to
-    force the distributed path (property tests exercise both).
+    force the distributed path (property tests exercise both). The local
+    path's surfaces and its returned map are JVM-side local relations
+    (``io.local_frame``): neither the signature job nor any action over the
+    map starts a Python worker, and the signatures never re-run the
+    gazetteer's plan.
 
     ``shingle_hash`` (forwarded to minhash_signatures) swaps the MinHash
     family; the md5-60-bit mirrorable family lets a DuckDB oracle replay the
@@ -187,9 +192,7 @@ def build_canon_map(
             spark = gazetteer.sparkSession
             surfaces = sorted({r["surface_form"] for r in gaz_rows})
             sig_rows = minhash_signatures(
-                spark.createDataFrame(
-                    [(s,) for s in surfaces], "surface_form string"
-                ),
+                local_frame(spark, [(s,) for s in surfaces], "surface_form string"),
                 "surface_form",
                 LSH_K,
                 shingle_hash=shingle_hash,
@@ -255,13 +258,6 @@ def run_pipeline(
     patterns = (
         patterns if patterns is not None else FX.build_relation_patterns(spark)
     )
-    # Corpus cardinality, used for two size-adaptive plan decisions (extract
-    # variant; fan-out checkpoint mode). interleave preserves row count, so
-    # the default corpus counts the FLAT parquet scan — a metadata-cheap
-    # count (footer row counts; an Iceberg table answers from the snapshot
-    # manifest). Overridden corpora count themselves (callers pass
-    # checkpointed/derived frames).
-    n_docs = (docs if docs_overridden else flat).count()
 
     # ONE fused, lazily-run gazetteer collect serves every dictionary-sized
     # plan decision (round 6, guide §5 "the driver should do almost no data
@@ -318,6 +314,7 @@ def run_pipeline(
     # + mtimes), not just the path: replacing the corpus at the same path
     # invalidates old snapshots instead of silently resuming stale triples.
     in_fp = path_fingerprint(f"{sf_dir}/documents.parquet")
+    override_fps = {}
     if store is not None:
         # Caller-supplied docs/gazetteer/patterns replace what sf_dir implies,
         # so the path fingerprint alone would resume snapshots computed from
@@ -325,7 +322,20 @@ def run_pipeline(
         # scan per overridden input, only on store-backed resumable runs).
         for name, df in overrides.items():
             if df is not None:
-                in_fp += f";{name}={dataframe_fingerprint(df)}"
+                override_fps[name] = dataframe_fingerprint(df)
+                in_fp += f";{name}={override_fps[name]}"
+    # Corpus cardinality, used for two size-adaptive plan decisions (extract
+    # variant; fan-out checkpoint mode). A store-backed run's docs-override
+    # fingerprint ("<rows>:<hash>") already counted the corpus, so it costs
+    # no job here. Otherwise interleave preserves row count, so the default
+    # corpus counts the FLAT parquet scan — a metadata-cheap count (footer
+    # row counts; an Iceberg table answers from the snapshot manifest).
+    # Other overridden corpora count themselves (callers pass
+    # checkpointed/derived frames).
+    if "docs" in override_fps:
+        n_docs = int(override_fps["docs"].split(":")[0])
+    else:
+        n_docs = (docs if docs_overridden else flat).count()
     params = {"sf_dir": sf_dir, "lsh_k": LSH_K, "bands": LSH_BANDS, "tau": JACCARD_T}
 
     def _params(stage: str) -> dict:

@@ -5,12 +5,15 @@ lineage + metrics").
 Spark has no cross-job checkpoint contract, so stages commit through a
 storage adapter:
 
-- ``ParquetSnapshotStore`` (sandbox): one directory per (stage, params_hash)
-  containing the parquet output plus ``_MANIFEST.json`` with
-  {stage, params_hash, input_fingerprint, rows, per-partition row counts,
+- ``ParquetSnapshotStore`` (local filesystem): one directory per (stage,
+  params_hash) containing the parquet output plus ``_MANIFEST.json`` with
+  {stage, params_hash, input_fingerprint, rows, per-part-file row counts,
   schema, counters}.  A write is atomic at the manifest level: the manifest
   is written only after the parquet commit succeeds, so a killed run leaves
-  no valid snapshot and the stage re-executes on resume.
+  no valid snapshot and the stage re-executes on resume.  The counts come
+  from the written files' parquet footers and the snapshot is re-opened
+  with the recorded schema, so a commit runs the write job and nothing
+  else.
 - The same API maps 1:1 onto Iceberg snapshots (`writeTo(...).createOrReplace`
   + snapshot metadata) when a catalog jar is present — see SURVEY §7.3.
 
@@ -26,13 +29,20 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST.json"
+# Manifest key of the snapshot's read schema (StructType.jsonValue()).
+# Manifests written before it existed resume by schema inference.
+SCHEMA_KEY = "spark_schema"
+# Spark names a write task's output part-<task partition>-<uuid>-c<file>...
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
 
 
 def params_hash(params: dict) -> str:
@@ -206,7 +216,27 @@ def materialize_fanout(
     return spark.read.parquet(path)
 
 
+def part_file_rows(data_dir: str) -> dict[str, int]:
+    """Rows per write task of a parquet directory, read from the part files'
+    footers (no Spark job), keyed by the task's partition number as a
+    string. Files one task split (``maxRecordsPerFile``) add up under its
+    key."""
+    import pyarrow.parquet as pq
+
+    rows: dict[str, int] = {}
+    for name in sorted(os.listdir(data_dir)):
+        m = _PART_FILE.match(name)
+        if m:
+            key = str(int(m.group(1)))
+            n = pq.read_metadata(os.path.join(data_dir, name)).num_rows
+            rows[key] = rows.get(key, 0) + n
+    return rows
+
+
 class ParquetSnapshotStore:
+    """Snapshot store on a local filesystem path (the manifest and the
+    footer row counts are read with plain file I/O)."""
+
     def __init__(self, base_dir: str):
         self.base_dir = base_dir
         os.makedirs(base_dir, exist_ok=True)
@@ -224,8 +254,18 @@ class ParquetSnapshotStore:
                 return json.load(f)
         return None
 
-    def read(self, spark: SparkSession, stage: str, phash: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self._dir(stage, phash), "data"))
+    def read(
+        self, spark: SparkSession, stage: str, phash: str, manifest: dict | None = None
+    ) -> DataFrame:
+        """The committed snapshot, opened with the schema its manifest
+        recorded (pass ``manifest`` to skip re-reading it), so no
+        schema-inference job runs; a manifest without one falls back to
+        inference."""
+        man = manifest if manifest is not None else self.load_manifest(stage, phash)
+        reader = spark.read
+        if man and man.get(SCHEMA_KEY):
+            reader = reader.schema(StructType.fromJson(man[SCHEMA_KEY]))
+        return reader.parquet(os.path.join(self._dir(stage, phash), "data"))
 
     def commit(
         self,
@@ -235,8 +275,13 @@ class ParquetSnapshotStore:
         input_fingerprint: str,
         extra: dict | None = None,
     ) -> tuple[DataFrame, dict]:
-        """Write data, gather per-partition lineage counters, then publish the
-        manifest (manifest-last = atomic commit point).
+        """Write data, gather lineage counters, then publish the manifest
+        (manifest-last = atomic commit point). The write is the only Spark
+        job: ``rows`` and ``partition_rows`` (rows per written part file,
+        keyed by write-task number) come from the parquet footers, and the
+        snapshot is re-opened with ``df``'s schema, which Spark's file
+        source makes nullable: exactly the schema inference would give. It
+        is recorded under SCHEMA_KEY for ``read``.
 
         The OLD manifest (if any) is deleted FIRST: otherwise a crash between
         the data rewrite and the manifest rewrite would leave a stale-but-
@@ -248,23 +293,16 @@ class ParquetSnapshotStore:
         if os.path.exists(old_manifest):
             os.remove(old_manifest)
         df.write.mode("overwrite").parquet(data_dir)
-        spark = df.sparkSession
-        committed = spark.read.parquet(data_dir)
-        per_part = {
-            str(r["pid"]): r["rows"]
-            for r in committed.groupBy(
-                F.spark_partition_id().alias("pid")
-            )
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        }
+        committed = df.sparkSession.read.schema(df.schema).parquet(data_dir)
+        per_part = part_file_rows(data_dir)
         manifest = {
             "stage": stage,
             "params_hash": phash,
             "input_fingerprint": input_fingerprint,
-            "rows": int(sum(per_part.values())),
+            "rows": sum(per_part.values()),
             "partition_rows": per_part,
             "schema": committed.schema.simpleString(),
+            SCHEMA_KEY: committed.schema.jsonValue(),
             **(extra or {}),
         }
         tmp = self.manifest_path(stage, phash) + ".tmp"
@@ -406,7 +444,12 @@ def run_stage(
     blocks, and each one recomputes the full upstream subtree (the mention
     UDF ran more than once). Eager materializes exactly once in its own
     job. Single-consumer stages stay fully lazy (a checkpoint there only
-    buys block traffic)."""
+    buys block traffic).
+
+    With a store, ``store.commit`` writes the output in one job and returns
+    a frame over the written files, which also serves fan-out consumers; a
+    resume opens the snapshot with its manifest's recorded schema, so it
+    runs no job before the caller's action."""
     if store is None:
         df = compute()
         if fan_out:
@@ -415,6 +458,8 @@ def run_stage(
     phash = params_hash(params)
     man = store.load_manifest(stage, phash)
     if man is not None and man.get("input_fingerprint") == input_fingerprint:
-        return StageResult(store.read(spark, stage, phash), skipped=True, manifest=man)
+        return StageResult(
+            store.read(spark, stage, phash, manifest=man), skipped=True, manifest=man
+        )
     df, man = store.commit(compute(), stage, phash, input_fingerprint)
     return StageResult(df, skipped=False, manifest=man)

@@ -17,6 +17,42 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
+_GIB = 1 << 30
+# The measured throughput heap (see get_spark's JVM-flag note); smaller hosts
+# get half their RAM.
+DRIVER_HEAP_CAP_GIB = 48
+
+
+def host_mem_bytes() -> int | None:
+    """Physical memory of this host (Linux: ``MemTotal``), or None if the
+    platform does not report it."""
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return None
+
+
+def default_driver_conf(mem_total: int | None = None) -> tuple[str, str]:
+    """(``spark.driver.memory``, driver JVM flags) that start on a host with
+    ``mem_total`` bytes of RAM (default: this host's).
+
+    The heap is half the host's RAM, capped at DRIVER_HEAP_CAP_GIB.
+    ``-XX:+AlwaysPreTouch`` commits and zeroes the whole heap at JVM start;
+    it is kept only on hosts with at least twice the capped heap, where it
+    was measured, and dropped elsewhere (a 48g pre-touched heap cannot start
+    on a 15 GB host). An unknown host keeps the measured recipe.
+    ``$SPARK_GRAFT_DRIVER_MEM`` and ``$SPARK_GRAFT_DRIVER_JAVA_OPTS``
+    override each part; set the latter to "" to pass no flags."""
+    total = host_mem_bytes() if mem_total is None else mem_total
+    heap_gib = DRIVER_HEAP_CAP_GIB
+    if total is not None:
+        heap_gib = max(1, min(DRIVER_HEAP_CAP_GIB, total // 2 // _GIB))
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{heap_gib}g")
+    big = total is None or total >= 2 * DRIVER_HEAP_CAP_GIB * _GIB
+    pretouch = " -XX:+AlwaysPreTouch" if big else ""
+    flags = f"-Xms{mem}{pretouch} -XX:+UseParallelGC"
+    return mem, os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", flags)
+
 
 def _default_local_dir() -> str | None:
     """Shuffle/spill dir. The sandbox VM disk serializes concurrent shuffle
@@ -48,6 +84,7 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
+    mem, java_opts = default_driver_conf()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -73,7 +110,7 @@ def get_spark(
         # local mode: the driver JVM hosts every executor thread — size the
         # heap for all-of-them (32 tasks × shuffle/agg buffers), not a
         # driver-only 1-2g default.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
     )
     # Driver JVM flags (local mode hosts all executor threads in the driver
@@ -88,13 +125,8 @@ def get_spark(
     # workload at every measured core count. The combination is the only arm
     # that was fastest at BOTH 2 and 8 pinned cores (35.3 s vs baseline
     # 38.2 @8; 88.8 vs 90.0 @2, min-of-2 each): selection is by absolute
-    # throughput per level, never by the scaling ratio.
-    # $SPARK_GRAFT_DRIVER_JAVA_OPTS overrides; set to "" to disable.
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-    java_opts = os.environ.get(
-        "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-        f"-Xms{mem} -XX:+AlwaysPreTouch -XX:+UseParallelGC",
-    )
+    # throughput per level, never by the scaling ratio. The heap size and
+    # whether to pre-touch it follow the host (default_driver_conf).
     if java_opts:
         builder = builder.config("spark.driver.extraJavaOptions", java_opts)
     local_dir = _default_local_dir()

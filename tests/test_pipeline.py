@@ -516,3 +516,40 @@ def test_pipeline_max_ents_per_doc_guard(spark, docs, gazetteer, patterns):
             patterns=patterns,
             max_ents_per_doc=1,
         ).triples.count()
+
+
+def _scans_python_rdd(df) -> bool:
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_driver_built_frames_start_no_python_worker(spark, gazetteer):
+    """The canon-local map (non-empty and empty), the relation patterns and
+    the local connected components are JVM-side local relations: no action
+    over them scans a PythonRDD (the createDataFrame(<python list>) path)."""
+    from kbgen_spark.operators.graph import connected_components
+
+    canon = build_canon_map(gazetteer)
+    assert canon.count() > 0 and not _scans_python_rdd(canon)
+    empty = build_canon_map(gazetteer.limit(0))
+    assert empty.count() == 0 and not _scans_python_rdd(empty)
+    assert empty.schema == canon.schema
+    patterns = FX.build_relation_patterns(spark)
+    assert patterns.count() == 3 and not _scans_python_rdd(patterns)
+    edges = gazetteer.select(
+        F.col("surface_form").alias("src"), F.col("entity_id").alias("dst")
+    )
+    comp = connected_components(edges)
+    assert comp.count() > 0 and not _scans_python_rdd(comp)
+    assert comp.schema["id"].dataType == edges.schema["src"].dataType
+
+
+def test_store_backed_run_keeps_fingerprint(spark, tmp_path, docs, gazetteer, patterns):
+    """Overrides on a store-backed run (n_docs from the docs fingerprint)
+    commit and resume the pinned sf0.001 triples."""
+    store = ParquetSnapshotStore(str(tmp_path / "ckpt"))
+    kw = dict(store=store, docs=docs, gazetteer=gazetteer, patterns=patterns)
+    first = run_pipeline(spark, SF_DIR, **kw)
+    assert triples_fingerprint(first.triples) == "432:3272129491746201518"
+    resumed = run_pipeline(spark, SF_DIR, **kw)
+    assert resumed.skipped == ["extract", "canon", "link", "materialize"]
+    assert triples_fingerprint(resumed.triples) == "432:3272129491746201518"
