@@ -27,6 +27,7 @@ from kbgen_spark.operators.materialize import assemble_triples
 from kbgen_spark.plans.lineage import (
     ParquetSnapshotStore,
     dataframe_fingerprint,
+    fingerprint_rows,
     path_fingerprint,
     run_stage,
 )
@@ -326,14 +327,14 @@ def run_pipeline(
                 in_fp += f";{name}={override_fps[name]}"
     # Corpus cardinality, used for two size-adaptive plan decisions (extract
     # variant; fan-out checkpoint mode). A store-backed run's docs-override
-    # fingerprint ("<rows>:<hash>") already counted the corpus, so it costs
-    # no job here. Otherwise interleave preserves row count, so the default
+    # fingerprint already counted the corpus, so it costs no job here.
+    # Otherwise interleave preserves row count, so the default
     # corpus counts the FLAT parquet scan — a metadata-cheap count (footer
     # row counts; an Iceberg table answers from the snapshot manifest).
     # Other overridden corpora count themselves (callers pass
     # checkpointed/derived frames).
     if "docs" in override_fps:
-        n_docs = int(override_fps["docs"].split(":")[0])
+        n_docs = fingerprint_rows(override_fps["docs"])
     else:
         n_docs = (docs if docs_overridden else flat).count()
     params = {"sf_dir": sf_dir, "lsh_k": LSH_K, "bands": LSH_BANDS, "tau": JACCARD_T}

@@ -38,9 +38,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST.json"
-# Manifest key of the snapshot's read schema (StructType.jsonValue()).
-# Manifests written before it existed resume by schema inference.
-SCHEMA_KEY = "spark_schema"
 # Spark names a write task's output part-<task partition>-<uuid>-c<file>...
 _PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
 
@@ -67,6 +64,11 @@ def dataframe_fingerprint(df: DataFrame) -> str:
         F.count("*").alias("n"),
     ).collect()[0]
     return f"{row['n']}:{int(row['h'])}"
+
+
+def fingerprint_rows(fingerprint: str) -> int:
+    """Row count of a ``dataframe_fingerprint``."""
+    return int(fingerprint.split(":")[0])
 
 
 def path_fingerprint(*paths: str) -> str:
@@ -254,17 +256,15 @@ class ParquetSnapshotStore:
                 return json.load(f)
         return None
 
-    def read(
-        self, spark: SparkSession, stage: str, phash: str, manifest: dict | None = None
-    ) -> DataFrame:
+    def read(self, spark: SparkSession, stage: str, phash: str) -> DataFrame:
         """The committed snapshot, opened with the schema its manifest
-        recorded (pass ``manifest`` to skip re-reading it), so no
-        schema-inference job runs; a manifest without one falls back to
-        inference."""
-        man = manifest if manifest is not None else self.load_manifest(stage, phash)
+        recorded, so no schema-inference job runs. Manifests written before
+        the schema was recorded as JSON (``schema`` is then a simpleString)
+        fall back to inference."""
+        man = self.load_manifest(stage, phash)
         reader = spark.read
-        if man and man.get(SCHEMA_KEY):
-            reader = reader.schema(StructType.fromJson(man[SCHEMA_KEY]))
+        if man and isinstance(man.get("schema"), dict):
+            reader = reader.schema(StructType.fromJson(man["schema"]))
         return reader.parquet(os.path.join(self._dir(stage, phash), "data"))
 
     def commit(
@@ -281,7 +281,7 @@ class ParquetSnapshotStore:
         keyed by write-task number) come from the parquet footers, and the
         snapshot is re-opened with ``df``'s schema, which Spark's file
         source makes nullable: exactly the schema inference would give. It
-        is recorded under SCHEMA_KEY for ``read``.
+        is recorded as JSON under ``schema`` for ``read``.
 
         The OLD manifest (if any) is deleted FIRST: otherwise a crash between
         the data rewrite and the manifest rewrite would leave a stale-but-
@@ -301,8 +301,7 @@ class ParquetSnapshotStore:
             "input_fingerprint": input_fingerprint,
             "rows": sum(per_part.values()),
             "partition_rows": per_part,
-            "schema": committed.schema.simpleString(),
-            SCHEMA_KEY: committed.schema.jsonValue(),
+            "schema": committed.schema.jsonValue(),
             **(extra or {}),
         }
         tmp = self.manifest_path(stage, phash) + ".tmp"
@@ -458,8 +457,6 @@ def run_stage(
     phash = params_hash(params)
     man = store.load_manifest(stage, phash)
     if man is not None and man.get("input_fingerprint") == input_fingerprint:
-        return StageResult(
-            store.read(spark, stage, phash, manifest=man), skipped=True, manifest=man
-        )
+        return StageResult(store.read(spark, stage, phash), skipped=True, manifest=man)
     df, man = store.commit(compute(), stage, phash, input_fingerprint)
     return StageResult(df, skipped=False, manifest=man)

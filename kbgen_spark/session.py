@@ -38,9 +38,9 @@ def default_driver_conf(mem_total: int | None = None) -> tuple[str, str]:
 
     The heap is half the host's RAM, capped at DRIVER_HEAP_CAP_GIB.
     ``-XX:+AlwaysPreTouch`` commits and zeroes the whole heap at JVM start;
-    it is kept only on hosts with at least twice the capped heap, where it
-    was measured, and dropped elsewhere (a 48g pre-touched heap cannot start
-    on a 15 GB host). An unknown host keeps the measured recipe.
+    it is kept only where the heap reaches the cap, the measured recipe,
+    and dropped on smaller heaps (a 48g pre-touched heap cannot start on a
+    15 GB host). An unknown host keeps the measured recipe.
     ``$SPARK_GRAFT_DRIVER_MEM`` and ``$SPARK_GRAFT_DRIVER_JAVA_OPTS``
     override each part; set the latter to "" to pass no flags."""
     total = host_mem_bytes() if mem_total is None else mem_total
@@ -48,8 +48,7 @@ def default_driver_conf(mem_total: int | None = None) -> tuple[str, str]:
     if total is not None:
         heap_gib = max(1, min(DRIVER_HEAP_CAP_GIB, total // 2 // _GIB))
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{heap_gib}g")
-    big = total is None or total >= 2 * DRIVER_HEAP_CAP_GIB * _GIB
-    pretouch = " -XX:+AlwaysPreTouch" if big else ""
+    pretouch = " -XX:+AlwaysPreTouch" if heap_gib == DRIVER_HEAP_CAP_GIB else ""
     flags = f"-Xms{mem}{pretouch} -XX:+UseParallelGC"
     return mem, os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", flags)
 

@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from kbgen_spark.pipeline import run_pipeline, triples_fingerprint
-from kbgen_spark.plans.lineage import SCHEMA_KEY, ParquetSnapshotStore
+from kbgen_spark.operators.materialize import write_triples
+from kbgen_spark.plans.lineage import ParquetSnapshotStore
 
 SF0001_FINGERPRINT = "432:3272129491746201518"
 
@@ -75,7 +76,7 @@ def test_resume_reads_with_recorded_schema(spark, tmp_path):
     committed, man = store.commit(df, "s", "h", "fp")
     data_dir = os.path.join(str(tmp_path), "s", "snapshot-h", "data")
     inferred = spark.read.parquet(data_dir).schema
-    assert StructType.fromJson(man[SCHEMA_KEY]) == committed.schema == inferred
+    assert StructType.fromJson(man["schema"]) == committed.schema == inferred
     with jobs_run(spark, "lineage-read") as ids:
         resumed = store.read(spark, "s", "h")
         schema = resumed.schema
@@ -87,7 +88,8 @@ def test_resume_reads_with_recorded_schema(spark, tmp_path):
 def test_pipeline_snapshots_resume_with_and_without_recorded_schema(spark, tmp_path):
     """Each stage's manifest counts its committed rows; a resume reads the
     committed rows with the recorded schema; manifests written before the
-    read schema was recorded (no SCHEMA_KEY) still resume, by inference."""
+    schema was recorded as JSON (a simpleString, or no key) still resume,
+    by inference."""
     store = ParquetSnapshotStore(str(tmp_path / "ckpt"))
     run = run_pipeline(spark, SF_DIR, store=store)
     assert triples_fingerprint(run.triples) == SF0001_FINGERPRINT
@@ -100,16 +102,22 @@ def test_pipeline_snapshots_resume_with_and_without_recorded_schema(spark, tmp_p
         assert stage.df.schema == run.stages[name].df.schema
         assert stage.df.exceptAll(run.stages[name].df).count() == 0
         assert run.stages[name].df.exceptAll(stage.df).count() == 0
-    for stage in run.stages.values():
-        path = store.manifest_path(stage.manifest["stage"], stage.manifest["params_hash"])
-        with open(path) as f:
-            man = json.load(f)
-        del man[SCHEMA_KEY]
-        with open(path, "w") as f:
-            json.dump(man, f)
-    legacy = run_pipeline(spark, SF_DIR, store=store)
-    assert legacy.skipped == ["extract", "canon", "link", "materialize"]
-    assert triples_fingerprint(legacy.triples) == SF0001_FINGERPRINT
+    for legacy_schema in (lambda s: s.simpleString(), None):
+        for stage in run.stages.values():
+            path = store.manifest_path(
+                stage.manifest["stage"], stage.manifest["params_hash"]
+            )
+            with open(path) as f:
+                man = json.load(f)
+            if legacy_schema is None:
+                del man["schema"]
+            else:
+                man["schema"] = legacy_schema(stage.df.schema)
+            with open(path, "w") as f:
+                json.dump(man, f)
+        legacy = run_pipeline(spark, SF_DIR, store=store)
+        assert legacy.skipped == ["extract", "canon", "link", "materialize"]
+        assert triples_fingerprint(legacy.triples) == SF0001_FINGERPRINT
 
 
 def _run_pipeline_job():
@@ -121,9 +129,17 @@ def _run_pipeline_job():
 
 
 def test_job_reports_count_of_single_write(spark, tmp_path):
+    """The job materializes the triples once: it runs exactly the jobs of
+    the pipeline plus one write, with no separate count. The first run in
+    a session fills driver-side caches, so the reference is the second."""
+    for i in range(2):
+        with jobs_run(spark, f"pipeline-write-{i}") as ref_ids:
+            write_triples(run_pipeline(spark, SF_DIR).triples, str(tmp_path / "ref"))
     job = _run_pipeline_job()
     out = str(tmp_path / "triples")
     args = job.parse_args(["--input", SF_DIR, "--output", out])
-    summary = job.run_job(spark, args)
+    with jobs_run(spark, "pipeline-job") as job_ids:
+        summary = job.run_job(spark, args)
+    assert len(job_ids) == len(ref_ids)
     assert summary["triples"] == 432
     assert spark.read.parquet(out).count() == 432
